@@ -16,6 +16,12 @@ This module replaces that with a committed manifest:
   ``streaming``-tagged entries the hash is over the SOURCE of the
   streaming modules instead (coarser: any streaming-module edit flags all
   five st* queries; conservative in the right direction).
+- Plans are built at a pinned ``PLAN_SLOTS`` task slots, whatever the
+  caller's ``SPARK_GRAFT_CPUS``: ``get_spark`` sizes ``local[N]`` and the
+  shuffle partitions from it, and several plans embed
+  ``defaultParallelism`` in their repartition counts, so an unpinned
+  hash would be a function of the host's cores, not of the query. The
+  manifest records the slot count it was made at.
 - ``source_sha`` records a hash per package source file at generation
   time. The fast suite test recomputes those (no Spark) and fails if any
   file changed since generation → a stale manifest cannot pass CI.
@@ -47,6 +53,8 @@ PKG = "etl_pipeline_telecom_spark"
 MANIFEST = os.path.join(REPO, "PLAN_MANIFEST.json")
 SF_DIR = "/root/testdata/sf0.01"
 BASELINE = os.path.join(REPO, "PLAN_BASELINE.json")
+# task slots the committed plan hashes are made at (see module docstring)
+PLAN_SLOTS = 32
 
 # run-local noise in optimized-plan text, in strip order
 _NORMALIZERS = (
@@ -283,7 +291,11 @@ def _latest_sweep_artifact() -> str | None:
 def generate(*, as_baseline: bool = False) -> dict:
     from etl_pipeline_telecom_spark.session import get_spark
 
+    os.environ["SPARK_GRAFT_CPUS"] = str(PLAN_SLOTS)
     spark = get_spark("plan-manifest")
+    slots = spark.sparkContext.defaultParallelism
+    if slots != PLAN_SLOTS:
+        raise SystemExit(f"plan manifest needs {PLAN_SLOTS} task slots, session has {slots}")
     plans = compute_plan_hashes(spark)
     if as_baseline:
         sweep = _latest_sweep_artifact()
@@ -306,6 +318,7 @@ def generate(*, as_baseline: bool = False) -> dict:
     )
     payload = {
         "sf_dir": SF_DIR,
+        "slots": PLAN_SLOTS,
         "baseline": os.path.basename(BASELINE) if baseline_plans else None,
         "source_sha": source_hashes(),
         "plans": plans,

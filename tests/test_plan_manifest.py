@@ -27,7 +27,7 @@ import os
 
 from etl_pipeline_telecom_spark import catalog
 
-from .plan_manifest import BASELINE, MANIFEST, source_hashes
+from .plan_manifest import BASELINE, MANIFEST, PLAN_SLOTS, source_hashes
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -45,6 +45,12 @@ def test_manifest_is_fresh_and_complete():
         "PLAN_MANIFEST.json is stale vs the source tree — regenerate with "
         "python -m tests.plan_manifest (and keep its changed_vs_baseline ⊆ DRIVER_WINDOW)"
     )
+
+
+def test_manifest_is_made_at_the_pinned_slot_count():
+    # hashes made at the host's core count would not compare with the
+    # baseline's (defaultParallelism is embedded in several plans)
+    assert _load(MANIFEST).get("slots") == PLAN_SLOTS
 
 
 def test_plan_drift_is_in_driver_window():

@@ -23,6 +23,7 @@ from etl_pipeline_telecom_spark.validation import churn_expectations, run_expect
 RAW_CSV = "/root/reference/data/raw/WA_Fn-UseC_-Telco-Customer-Churn.csv"
 
 
+@pytest.mark.skipif(not os.path.exists(RAW_CSV), reason="reference data not present")
 def test_churn_validation_all_pass(spark):
     staged = transform_churn(read_raw(spark, RAW_CSV))
     results = run_expectations(staged, churn_expectations())
