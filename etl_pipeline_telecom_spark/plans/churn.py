@@ -155,7 +155,9 @@ def churn_analytics(df: DataFrame) -> dict[str, DataFrame]:
 
     Input: staged table (any header shape — columns resolved fuzzily like
     the notebook). Returns the four supporting tables plus a one-row
-    scalar-metrics frame; callers write them with the K1/K2 sinks.
+    scalar-metrics frame; callers write them with the K1/K2 sinks. Every
+    table re-reads ``df``, so a caller that sinks them all caches ``df``
+    and releases it after its last sink (:func:`run_pipeline`).
     """
     df, churn_flag_col = normalize_churn(df)
     cols = df.columns
@@ -165,7 +167,6 @@ def churn_analytics(df: DataFrame) -> dict[str, DataFrame]:
     internet = safe_find(cols, ["InternetService", "internetservice", "internet_service"])
 
     df = df.withColumn(mc, F.col(mc).cast("string").try_cast("double"))
-    df.cache()
 
     out: dict[str, DataFrame] = {}
 
@@ -231,8 +232,12 @@ def run_pipeline(spark: SparkSession, raw_path: str, out_dir: str) -> dict[str, 
 
     staged = transform_churn(read_raw(spark, raw_path))
     paths = {"staged": write_single_csv(staged, os.path.join(out_dir, "churn_staged.csv"))}
-    tables = churn_analytics(normalize_headers(staged))
-    for name, tdf in tables.items():
-        paths[name] = write_single_csv(tdf, os.path.join(out_dir, f"{name}.csv"))
-    paths["summary_json"] = write_single_json(tables["summary"], os.path.join(out_dir, "analysis_summary.json"))
+    analytics_in = normalize_headers(staged).cache()
+    try:
+        tables = churn_analytics(analytics_in)
+        for name, tdf in tables.items():
+            paths[name] = write_single_csv(tdf, os.path.join(out_dir, f"{name}.csv"))
+        paths["summary_json"] = write_single_json(tables["summary"], os.path.join(out_dir, "analysis_summary.json"))
+    finally:
+        analytics_in.unpersist()
     return paths

@@ -1996,51 +1996,39 @@ def _pipe5_replay_dir(sf_dir: str) -> str:
     base band index serves both — as ``_PIPE5_SLICES`` parquet files with
     ascending mtimes (slice = (doc_id // 7) % 4, a deterministic rule the
     DuckDB oracle replays), so a maxFilesPerTrigger=1 stream delivers the
-    batch as ordered micro-batches. Atomic publish via rename, keyed by
-    source path+mtime (replay_table_slices' discipline, re-derived here so
-    pipe5 never touches the streaming module's source hash)."""
-    import hashlib
+    batch as ordered micro-batches. Staged once per source by
+    :func:`sources.writers.staged_dir` (re-derived here rather than
+    shared with replay_table_slices, so pipe5 never touches the streaming
+    module's source hash)."""
     import os
-    import shutil
     import time as _time
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from ..sources.writers import _stage_key, staged_dir
+
     src = os.path.join(sf_dir, "documents.parquet")
-    # size + mtime_ns, not bare mtime: a regenerated fixture that lands
-    # within coarse-mtime granularity (or a copy with preserved
-    # timestamps) must not serve stale slices — writers._stage_key's
-    # staleness contract (ADVICE r13)
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}:{_PIPE5_SLICES}".encode()
-    ).hexdigest()[:10]
-    out_dir = os.path.join("/tmp", f"spark_graft_pipe5_replay_{key}")
-    if os.path.isdir(out_dir):
-        return out_dir
-    work = f"{out_dir}.stage-{os.getpid()}-{_time.monotonic_ns()}"
-    os.makedirs(work)
-    t = pq.read_table(src, columns=["doc_id", "text"])
-    ids = t.column("doc_id").to_numpy()
-    dups = t.filter(pa.array(ids % 10 == 0))
-    dups = dups.set_column(0, "doc_id", pc.add(dups.column("doc_id"), _DUP_OFFSET))
-    cwd = pa.concat_tables([t, dups])
-    cids = cwd.column("doc_id").to_numpy()
-    batch = cwd.filter(pa.array(cids % 7 == 3))
-    sl = (batch.column("doc_id").to_numpy() // 7) % _PIPE5_SLICES
-    base_t = _time.time() - 3600
-    for s in range(_PIPE5_SLICES):
-        part = batch.filter(pa.array(sl == s)).sort_by("doc_id")
-        path = os.path.join(work, f"{s:02d}_batch.parquet")
-        pq.write_table(part, path)
-        os.utime(path, (base_t + 10 * s, base_t + 10 * s))
-    try:
-        os.rename(work, out_dir)  # atomic publish
-    except OSError:
-        shutil.rmtree(work, ignore_errors=True)
-    return out_dir
+
+    def build(work: str) -> None:
+        os.makedirs(work)
+        t = pq.read_table(src, columns=["doc_id", "text"])
+        ids = t.column("doc_id").to_numpy()
+        dups = t.filter(pa.array(ids % 10 == 0))
+        dups = dups.set_column(0, "doc_id", pc.add(dups.column("doc_id"), _DUP_OFFSET))
+        cwd = pa.concat_tables([t, dups])
+        cids = cwd.column("doc_id").to_numpy()
+        batch = cwd.filter(pa.array(cids % 7 == 3))
+        sl = (batch.column("doc_id").to_numpy() // 7) % _PIPE5_SLICES
+        base_t = _time.time() - 3600
+        for s in range(_PIPE5_SLICES):
+            part = batch.filter(pa.array(sl == s)).sort_by("doc_id")
+            path = os.path.join(work, f"{s:02d}_batch.parquet")
+            pq.write_table(part, path)
+            os.utime(path, (base_t + 10 * s, base_t + 10 * s))
+
+    return staged_dir("pipe5_replay", _stage_key(src, f"pipe5:{_PIPE5_SLICES}"), build)
 
 
 def _pipe5_model(spark: SparkSession, sf_dir: str):

@@ -1544,30 +1544,25 @@ def persisted_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Build-once IVF index for the BASE split (vec_id % 7 != 3): the
     centroid model at ``<dir>/cent`` and the cell assignments at
     ``<dir>/assign``, PARTITIONED BY cid so a probe reads only its
-    probed cells (partition pruning — the IVF read contract). Keyed on
-    the fixture's (abspath, size, mtime_ns) like every staged layout, so
-    a regenerated fixture auto-invalidates; atomic rename publish."""
+    probed cells (partition pruning — the IVF read contract). Staged once
+    per fixture by :func:`sources.writers.staged_dir`, so a regenerated
+    fixture auto-invalidates."""
     import os
-    import time
 
-    from ..sources.writers import _publish_stage, _stage_key, _sweep_stale_stage_work
+    from ..sources.writers import _stage_key, staged_dir
+
+    def build(work: str) -> None:
+        base = _quantized(spark, sf_dir).where(F.col("vec_id") % _V15_NEW_MOD != 3)
+        _v15_centroids(base).coalesce(1).write.parquet(os.path.join(work, "cent"))
+        (
+            _v15_assign(base, spark.read.parquet(os.path.join(work, "cent")))
+            .repartition("cid")
+            .write.partitionBy("cid")
+            .parquet(os.path.join(work, "assign"))
+        )
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    out_dir = f"/tmp/spark_graft_v15_base_{_stage_key(src, 'v15base')}"
-    _sweep_stale_stage_work("/tmp/spark_graft_v15_base_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    base = _quantized(spark, sf_dir).where(F.col("vec_id") % _V15_NEW_MOD != 3)
-    cent = _v15_centroids(base)
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    cent.coalesce(1).write.parquet(os.path.join(work, "cent"))
-    (
-        _v15_assign(base, spark.read.parquet(os.path.join(work, "cent")))
-        .repartition("cid")
-        .write.partitionBy("cid")
-        .parquet(os.path.join(work, "assign"))
-    )
-    return _publish_stage(work, out_dir)
+    return staged_dir("v15_base", _stage_key(src, "v15base"), build)
 
 
 def staged_ivf_delta(spark: SparkSession, sf_dir: str, base_dir: str) -> str:
@@ -1578,20 +1573,16 @@ def staged_ivf_delta(spark: SparkSession, sf_dir: str, base_dir: str) -> str:
     physical untouched-files pin in tests/test_r12_ops.py holds byte
     sizes and mtimes across this call."""
     import os
-    import time
 
-    from ..sources.writers import _publish_stage, _stage_key, _sweep_stale_stage_work
+    from ..sources.writers import _stage_key, staged_dir
+
+    def build(work: str) -> None:
+        cent = spark.read.parquet(os.path.join(base_dir, "cent"))
+        new = _quantized(spark, sf_dir).where(F.col("vec_id") % _V15_NEW_MOD == 3)
+        _v15_assign(new, cent).repartition("cid").write.partitionBy("cid").parquet(work)
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    out_dir = f"/tmp/spark_graft_v15_delta_{_stage_key(src, 'v15delta')}"
-    _sweep_stale_stage_work("/tmp/spark_graft_v15_delta_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    cent = spark.read.parquet(os.path.join(base_dir, "cent"))
-    new = _quantized(spark, sf_dir).where(F.col("vec_id") % _V15_NEW_MOD == 3)
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    _v15_assign(new, cent).repartition("cid").write.partitionBy("cid").parquet(work)
-    return _publish_stage(work, out_dir)
+    return staged_dir("v15_delta", _stage_key(src, "v15delta"), build)
 
 
 _SQL_V15 = f"""WITH q AS ({_SQL_EMB}),

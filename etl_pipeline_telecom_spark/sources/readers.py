@@ -155,52 +155,41 @@ def stage_events_jsonl(sf_dir: str) -> str:
 
     Determinism: rows sorted by event_id; doubles via json.dumps (repr
     shortest-roundtrip — parses back to the identical float64);
-    timestamps as 'yyyy-MM-dd HH:mm:ss.SSSSSS' naive-UTC strings; cached
-    by source mtime and published with an atomic rename (the
-    replay_dir_with_sentinels discipline).
+    timestamps as 'yyyy-MM-dd HH:mm:ss.SSSSSS' naive-UTC strings. Staged
+    once per source by :func:`sources.writers.staged_dir`.
     """
-    import hashlib
     import json as _json
-    import time as _time
 
-    import pyarrow.parquet as pq
-
-    src = os.path.join(sf_dir, "events.parquet")
-    key = hashlib.md5(f"{os.path.abspath(src)}:{os.path.getmtime(src)}".encode()).hexdigest()[:10]
-    out_dir = f"/tmp/spark_graft_x4_jsonl_{key}"
-    out = os.path.join(out_dir, "events.jsonl")
-    if os.path.isfile(out):
-        return out
-    work = f"{out_dir}.stage-{os.getpid()}-{_time.monotonic_ns()}"
-    os.makedirs(work)
     import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    t = pq.read_table(src)
-    # either fixture generation (ns or us unit) → µs datetimes
-    ts_us = pc.cast(t["ts"], pa.timestamp("us")).to_pylist()
-    cols = {name: t[name].to_pylist() for name in ("event_id", "user_id", "event_type", "value", "props")}
-    cols["ts"] = ts_us
-    rows = sorted(zip(*(cols[c] for c in ("event_id", "ts", "user_id", "event_type", "value", "props"))))
-    with open(os.path.join(work, "events.jsonl"), "w") as f:
-        for eid, ts, uid, etype, value, props in rows:
-            f.write(
-                _json.dumps(
-                    {
-                        "event_id": eid,
-                        "ts": None if ts is None else ts.strftime("%Y-%m-%d %H:%M:%S.%f"),
-                        "user_id": uid,
-                        "event_type": etype,
-                        "value": value,
-                        "props": props,
-                    }
+    from .writers import _stage_key, staged_dir
+
+    src = os.path.join(sf_dir, "events.parquet")
+
+    def build(work: str) -> None:
+        os.makedirs(work)
+        t = pq.read_table(src)
+        # either fixture generation (ns or us unit) → µs datetimes
+        ts_us = pc.cast(t["ts"], pa.timestamp("us")).to_pylist()
+        cols = {name: t[name].to_pylist() for name in ("event_id", "user_id", "event_type", "value", "props")}
+        cols["ts"] = ts_us
+        rows = sorted(zip(*(cols[c] for c in ("event_id", "ts", "user_id", "event_type", "value", "props"))))
+        with open(os.path.join(work, "events.jsonl"), "w") as f:
+            for eid, ts, uid, etype, value, props in rows:
+                f.write(
+                    _json.dumps(
+                        {
+                            "event_id": eid,
+                            "ts": None if ts is None else ts.strftime("%Y-%m-%d %H:%M:%S.%f"),
+                            "user_id": uid,
+                            "event_type": etype,
+                            "value": value,
+                            "props": props,
+                        }
+                    )
+                    + "\n"
                 )
-                + "\n"
-            )
-    try:
-        os.rename(work, out_dir)
-    except OSError:
-        import shutil
 
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+    return os.path.join(staged_dir("x4_jsonl", _stage_key(src, "x4"), build), "events.jsonl")

@@ -19,6 +19,8 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -39,28 +41,61 @@ def _stage_key(src: str, tag: str) -> str:
     ).hexdigest()[:10]
 
 
-def _sweep_stale_stage_work(family_prefix: str, *, max_age_sec: float = 3600.0) -> None:
+_STAGE_ROOT = "/tmp"
+_STAGE_WORK_MAX_AGE_SEC = 3600.0
+
+
+def _sweep_stale_stage_work(family_prefix: str) -> None:
     """Remove orphan ``<family>*.stage-*`` work dirs left by a crashed
     staging run (any cache key — old keys orphan their work too). Only
-    sweeps dirs older than ``max_age_sec`` so a CONCURRENT stager's live
-    work dir is never pulled out from under it (the pid+monotonic suffix
+    sweeps dirs older than an hour so a CONCURRENT stager's live work
+    dir is never pulled out from under it (the pid+monotonic suffix
     makes names unique per attempt)."""
-    import time
-
     for work in glob.glob(f"{family_prefix}*.stage-*"):
         try:
-            if time.time() - os.path.getmtime(work) > max_age_sec:
+            if time.time() - os.path.getmtime(work) > _STAGE_WORK_MAX_AGE_SEC:
                 shutil.rmtree(work, ignore_errors=True)
         except OSError:
             pass
 
 
-def _publish_stage(work: str, out_dir: str) -> str:
-    """Atomic rename publish; loser of a concurrent race cleans up."""
+def _staged_path(family: str, key: str) -> str:
+    return os.path.join(_STAGE_ROOT, f"spark_graft_{family}_{key}")
+
+
+def staged_dir(family: str, key: str, build: Callable[[str], None]) -> str:
+    """Build-once staging of a cached layout: the one policy behind every
+    ``/tmp/spark_graft_{family}_{key}`` fixture, replay and index.
+
+    - Reuse: a published dir is returned after one ``isdir`` check.
+    - Build: orphan work dirs of the family are swept, then
+      ``build(work)`` fills a private ``.stage-{pid}-{ns}`` path (it must
+      create it — Spark writers refuse an existing dir).
+    - Publish: one atomic ``os.rename``, so a reader sees the whole
+      layout or none of it; the loser of a concurrent race drops its copy
+      and returns the winner's.
+    - Crash: a ``build`` that raises removes its work dir and re-raises.
+
+    ``key`` is ``_stage_key(src, tag)`` at every site but one: the
+    per-table micro-batch replay keeps its legacy mtime key (see
+    ``streaming.jobs.replay_table_slices``).
+    """
+    out_dir = _staged_path(family, key)
+    if os.path.isdir(out_dir):
+        return out_dir
+    _sweep_stale_stage_work(_staged_path(family, ""))
+    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
+    try:
+        build(work)
+    except BaseException:
+        shutil.rmtree(work, ignore_errors=True)
+        raise
     try:
         os.rename(work, out_dir)
     except OSError:
         shutil.rmtree(work, ignore_errors=True)
+        if not os.path.isdir(out_dir):
+            raise
     return out_dir
 
 
@@ -152,28 +187,22 @@ def stage_partitioned_events(spark, sf_dir: str) -> str:
     The p5 catalog query reads this sink back with a partition filter —
     the write side of the §7 layout story (bucketing.py covers joins;
     this covers the partition-pruned scan every time-partitioned fact
-    table lives by). Cached by source (size, mtime_ns); atomic rename
-    publish (the replay_dir_with_sentinels discipline).
+    table lives by). Staged once per source by :func:`staged_dir`.
     """
-    import time
-
     from pyspark.sql import functions as F
 
     from .readers import load_table
 
+    def build(work: str) -> None:
+        (
+            load_table(spark, sf_dir, "events")
+            .withColumn("event_date", F.to_date("ts"))
+            .write.partitionBy("event_date")
+            .parquet(work)
+        )
+
     src = os.path.join(sf_dir, "events.parquet")
-    out_dir = f"/tmp/spark_graft_p5_part_{_stage_key(src, 'p5')}"
-    _sweep_stale_stage_work("/tmp/spark_graft_p5_part_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    (
-        load_table(spark, sf_dir, "events")
-        .withColumn("event_date", F.to_date("ts"))
-        .write.partitionBy("event_date")
-        .parquet(work)
-    )
-    return _publish_stage(work, out_dir)
+    return staged_dir("p5_part", _stage_key(src, "p5"), build)
 
 
 def stage_bucketed_events(spark, sf_dir: str, n_buckets: int = 24) -> str:
@@ -185,34 +214,28 @@ def stage_bucketed_events(spark, sf_dir: str, n_buckets: int = 24) -> str:
     a DuckDB oracle can recompute membership); ``repartition(bucket)``
     guarantees each bucket's rows land in exactly ONE task → one part
     file per directory — the file-count invariant p7's audit reads back
-    through ``_metadata``. Cached by source (size, mtime_ns); atomic
-    rename publish (the stage_partitioned_events discipline).
+    through ``_metadata``. Staged once per source by :func:`staged_dir`.
     """
-    import time
-
     from pyspark.sql import functions as F
 
     from .readers import load_table
 
+    def build(work: str) -> None:
+        bucket = (
+            F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
+            .cast("bigint")
+            % n_buckets
+        )
+        (
+            load_table(spark, sf_dir, "events")
+            .select("event_id", "user_id", "event_type", "value", bucket.alias("bucket"))
+            .repartition("bucket")
+            .write.partitionBy("bucket")
+            .parquet(work)
+        )
+
     src = os.path.join(sf_dir, "events.parquet")
-    out_dir = f"/tmp/spark_graft_p7_bucket_{_stage_key(src, f'p7:{n_buckets}')}"
-    _sweep_stale_stage_work("/tmp/spark_graft_p7_bucket_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % n_buckets
-    )
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "user_id", "event_type", "value", bucket.alias("bucket"))
-        .repartition("bucket")
-        .write.partitionBy("bucket")
-        .parquet(work)
-    )
-    return _publish_stage(work, out_dir)
+    return staged_dir("p7_bucket", _stage_key(src, f"p7:{n_buckets}"), build)
 
 
 def stage_two_generation_events(spark, sf_dir: str) -> str:
@@ -223,31 +246,26 @@ def stage_two_generation_events(spark, sf_dir: str) -> str:
     event_ids) adds ``quality_tier`` — the additive-column evolution
     every long-lived feed goes through. A ``mergeSchema`` read of the
     parent must surface the new column with NULLs for gen-1 rows.
-    Cached by source (size, mtime_ns); atomic rename publish.
+    Staged once per source by :func:`staged_dir`.
     """
-    import time
-
     from pyspark.sql import functions as F
 
     from .readers import load_table
 
+    def build(work: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        tier = F.when(F.col("value") >= 50.0, "hi").otherwise("lo")
+        ev.where(F.col("event_id") % 2 == 0).write.parquet(os.path.join(work, "gen=1"))
+        (
+            ev.where(F.col("event_id") % 2 == 1)
+            .withColumn("quality_tier", tier)
+            .write.parquet(os.path.join(work, "gen=2"))
+        )
+
     src = os.path.join(sf_dir, "events.parquet")
-    out_dir = f"/tmp/spark_graft_dq7_gen_{_stage_key(src, 'dq7')}"
-    _sweep_stale_stage_work("/tmp/spark_graft_dq7_gen_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    tier = F.when(F.col("value") >= 50.0, "hi").otherwise("lo")
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    ev.where(F.col("event_id") % 2 == 0).write.parquet(os.path.join(work, "gen=1"))
-    (
-        ev.where(F.col("event_id") % 2 == 1)
-        .withColumn("quality_tier", tier)
-        .write.parquet(os.path.join(work, "gen=2"))
-    )
-    return _publish_stage(work, out_dir)
+    return staged_dir("dq7_gen", _stage_key(src, "dq7"), build)
 
 
 def zorder_value(bx, by, bits: int = 8):
@@ -279,48 +297,44 @@ def stage_zorder_events(spark, sf_dir: str, *, layout: str) -> str:
     DuckDB oracle reassigns every row to its file analytically.
     ``repartition(file)`` keeps each file directory to ONE part file —
     the 1:1 invariant p8's ``_metadata`` audit verifies (p7 discipline).
-    Cached by source (size, mtime_ns); atomic rename publish.
+    Staged once per source by :func:`staged_dir`.
     """
-    import time
-
     from pyspark.sql import functions as F
 
     from .readers import load_table
 
     assert layout in ("zorder", "linear")
+
+    def build(work: str) -> None:
+        ev = (
+            load_table(spark, sf_dir, "events")
+            .where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
+            .select("event_id", F.unix_micros("ts").alias("t"), "user_id")
+        )
+        extent = ev.agg(
+            F.min("t").alias("min_t"),
+            F.max("t").alias("max_t"),
+            F.min("user_id").alias("min_u"),
+            F.max("user_id").alias("max_u"),
+        )
+        # integer-exact binning (bigint `div`, not double `/`): a double
+        # quotient is only exact below 2^53 — micros since epoch × 256 is not
+        bx = F.expr("CAST((t - min_t) * 256 div (max_t - min_t + 1) AS INT)")
+        by = F.expr("CAST((user_id - min_u) * 256 div (max_u - min_u + 1) AS INT)")
+        binned = ev.crossJoin(F.broadcast(extent))
+        if layout == "zorder":
+            fcol = F.shiftright(zorder_value(bx, by, 8), 12)
+        else:
+            fcol = F.shiftright(bx, 4)
+        (
+            binned.select("event_id", "t", "user_id", fcol.cast("int").alias("zfile"))
+            .repartition("zfile")
+            .write.partitionBy("zfile")
+            .parquet(work)
+        )
+
     src = os.path.join(sf_dir, "events.parquet")
-    out_dir = f"/tmp/spark_graft_p8_{layout}_{_stage_key(src, f'p8:{layout}')}"
-    _sweep_stale_stage_work(f"/tmp/spark_graft_p8_{layout}_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .select("event_id", F.unix_micros("ts").alias("t"), "user_id")
-    )
-    extent = ev.agg(
-        F.min("t").alias("min_t"),
-        F.max("t").alias("max_t"),
-        F.min("user_id").alias("min_u"),
-        F.max("user_id").alias("max_u"),
-    )
-    # integer-exact binning (bigint `div`, not double `/`): a double
-    # quotient is only exact below 2^53 — micros since epoch × 256 is not
-    bx = F.expr("CAST((t - min_t) * 256 div (max_t - min_t + 1) AS INT)")
-    by = F.expr("CAST((user_id - min_u) * 256 div (max_u - min_u + 1) AS INT)")
-    binned = ev.crossJoin(F.broadcast(extent))
-    if layout == "zorder":
-        fcol = F.shiftright(zorder_value(bx, by, 8), 12)
-    else:
-        fcol = F.shiftright(bx, 4)
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    (
-        binned.select("event_id", "t", "user_id", fcol.cast("int").alias("zfile"))
-        .repartition("zfile")
-        .write.partitionBy("zfile")
-        .parquet(work)
-    )
-    return _publish_stage(work, out_dir)
+    return staged_dir(f"p8_{layout}", _stage_key(src, f"p8:{layout}"), build)
 
 
 def compact_bucketed_layout(
@@ -337,45 +351,38 @@ def compact_bucketed_layout(
     bounded driver collect (vocab/centroid discipline); the REWRITE is
     scan → coalesce(1) → write per bin — coalesce only narrows, so
     payload rows NEVER shuffle (asserted at plan level in
-    tests/test_r10_ops.py). Cached by source (size, mtime_ns); atomic
-    rename publish.
+    tests/test_r10_ops.py). Staged once per source by :func:`staged_dir`.
     """
-    import time
-
     from pyspark.sql import functions as F
 
-    src = os.path.join(sf_dir, "events.parquet")
     staged = stage_bucketed_events(spark, sf_dir, n_buckets)
-    out_dir = (
-        f"/tmp/spark_graft_p10_compact_{_stage_key(src, f'p10:{n_buckets}:{n_bins}')}"
-    )
-    _sweep_stale_stage_work("/tmp/spark_graft_p10_compact_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    per = (
-        spark.read.parquet(staged)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("bucket")
-        .collect()  # n_buckets rows — metadata-scale, never corpus rows
-    )
-    total = sum(r.n for r in per)
-    if total == 0:
-        # an empty staged source has nothing to pack — fail loud instead
-        # of a bare ZeroDivisionError on the budget division (ADVICE r10)
-        raise ValueError(f"compact_bucketed_layout: staged source {staged} is empty")
-    budget = -(-total // n_bins)  # ceil
-    cum = 0
-    bins: dict[int, list[int]] = {}
-    for r in per:
-        bins.setdefault(cum // budget, []).append(int(r.bucket))
-        cum += int(r.n)
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    for bin_id, buckets in sorted(bins.items()):
-        paths = [os.path.join(staged, f"bucket={k}") for k in buckets]
-        member = spark.read.option("basePath", staged).parquet(*paths)
-        member.coalesce(1).write.parquet(os.path.join(work, f"bin={bin_id}"))
-    return _publish_stage(work, out_dir)
+
+    def build(work: str) -> None:
+        per = (
+            spark.read.parquet(staged)
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .orderBy("bucket")
+            .collect()  # n_buckets rows — metadata-scale, never corpus rows
+        )
+        total = sum(r.n for r in per)
+        if total == 0:
+            # an empty staged source has nothing to pack — fail loud instead
+            # of a bare ZeroDivisionError on the budget division (ADVICE r10)
+            raise ValueError(f"compact_bucketed_layout: staged source {staged} is empty")
+        budget = -(-total // n_bins)  # ceil
+        cum = 0
+        bins: dict[int, list[int]] = {}
+        for r in per:
+            bins.setdefault(cum // budget, []).append(int(r.bucket))
+            cum += int(r.n)
+        for bin_id, buckets in sorted(bins.items()):
+            paths = [os.path.join(staged, f"bucket={k}") for k in buckets]
+            member = spark.read.option("basePath", staged).parquet(*paths)
+            member.coalesce(1).write.parquet(os.path.join(work, f"bin={bin_id}"))
+
+    src = os.path.join(sf_dir, "events.parquet")
+    return staged_dir("p10_compact", _stage_key(src, f"p10:{n_buckets}:{n_bins}"), build)
 
 
 def stage_fragmented_events(spark, sf_dir: str, n_buckets: int = 16) -> str:
@@ -390,37 +397,32 @@ def stage_fragmented_events(spark, sf_dir: str, n_buckets: int = 16) -> str:
     DuckDB oracle recomputes membership and the EXPECTED file counts
     analytically. ``repartition("bucket", "frag")`` puts each (bucket,
     frag) key in exactly ONE task → one part file per leaf directory →
-    file count per bucket == its distinct-frag count. Cached by source
-    (size, mtime_ns); atomic rename publish.
+    file count per bucket == its distinct-frag count. Staged once per
+    source by :func:`staged_dir`.
     """
-    import time
-
     from pyspark.sql import functions as F
 
     from .readers import load_table
 
-    src = os.path.join(sf_dir, "events.parquet")
-    out_dir = f"/tmp/spark_graft_p11_frag_{_stage_key(src, f'p11:{n_buckets}')}"
-    _sweep_stale_stage_work("/tmp/spark_graft_p11_frag_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    h = F.md5(F.col("event_id").cast("string"))
-    bucket = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % n_buckets
-    frag = F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint") % (
-        F.lit(1) + bucket % 4
-    )
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "event_id", "user_id", "event_type", "value",
-            bucket.alias("bucket"), frag.alias("frag"),
+    def build(work: str) -> None:
+        h = F.md5(F.col("event_id").cast("string"))
+        bucket = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % n_buckets
+        frag = F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint") % (
+            F.lit(1) + bucket % 4
         )
-        .repartition("bucket", "frag")
-        .write.partitionBy("bucket", "frag")
-        .parquet(work)
-    )
-    return _publish_stage(work, out_dir)
+        (
+            load_table(spark, sf_dir, "events")
+            .select(
+                "event_id", "user_id", "event_type", "value",
+                bucket.alias("bucket"), frag.alias("frag"),
+            )
+            .repartition("bucket", "frag")
+            .write.partitionBy("bucket", "frag")
+            .parquet(work)
+        )
+
+    src = os.path.join(sf_dir, "events.parquet")
+    return staged_dir("p11_frag", _stage_key(src, f"p11:{n_buckets}"), build)
 
 
 def incremental_compact_fragments(
@@ -437,43 +439,39 @@ def incremental_compact_fragments(
 
     The qualifying set comes from a bounded driver collect (n_buckets
     rows of (bucket, n_files) metadata — the p10/vocab discipline).
-    Cached by source (size, mtime_ns); atomic rename publish.
+    Staged once per source by :func:`staged_dir`.
     """
-    import time
-
     from pyspark.sql import functions as F
 
-    src = os.path.join(sf_dir, "events.parquet")
     staged = stage_fragmented_events(spark, sf_dir, n_buckets)
-    out_dir = (
-        f"/tmp/spark_graft_p11_compact_{_stage_key(src, f'p11c:{n_buckets}:{max_files}')}"
-    )
-    _sweep_stale_stage_work("/tmp/spark_graft_p11_compact_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    per = (
-        spark.read.parquet(staged)
-        # file_path, not file_name: one task writing two leaf dirs reuses
-        # the same part-file basename in both
-        .select("bucket", F.col("_metadata.file_path").alias("f"))
-        .groupBy("bucket")
-        .agg(F.countDistinct("f").alias("n_files"))
-        .collect()  # n_buckets rows — metadata-scale, never corpus rows
-    )
-    qualifying = sorted(int(r.bucket) for r in per if r.n_files > max_files)
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    os.makedirs(work, exist_ok=True)  # zero qualifying buckets → an
-    # empty-but-published layout, not a missing dir
-    for k in qualifying:
-        member = spark.read.option("basePath", staged).parquet(
-            os.path.join(staged, f"bucket={k}")
+
+    def build(work: str) -> None:
+        per = (
+            spark.read.parquet(staged)
+            # file_path, not file_name: one task writing two leaf dirs reuses
+            # the same part-file basename in both
+            .select("bucket", F.col("_metadata.file_path").alias("f"))
+            .groupBy("bucket")
+            .agg(F.countDistinct("f").alias("n_files"))
+            .collect()  # n_buckets rows — metadata-scale, never corpus rows
         )
-        (
-            member.drop("frag")
-            .coalesce(1)
-            .write.parquet(os.path.join(work, f"bucket={k}"))
-        )
-    return _publish_stage(work, out_dir)
+        qualifying = sorted(int(r.bucket) for r in per if r.n_files > max_files)
+        os.makedirs(work)  # zero qualifying buckets → an empty-but-published
+        # layout, not a missing dir
+        for k in qualifying:
+            member = spark.read.option("basePath", staged).parquet(
+                os.path.join(staged, f"bucket={k}")
+            )
+            (
+                member.drop("frag")
+                .coalesce(1)
+                .write.parquet(os.path.join(work, f"bucket={k}"))
+            )
+
+    src = os.path.join(sf_dir, "events.parquet")
+    return staged_dir(
+        "p11_compact", _stage_key(src, f"p11c:{n_buckets}:{max_files}"), build
+    )
 
 
 def stage_versioned_events(
@@ -491,20 +489,12 @@ def stage_versioned_events(
     the stat fields are the PHYSICAL snapshot pin: a later version may
     only ADD files and STOP REFERENCING old ones — never rewrite them —
     so re-stat'ing version 1's entries after the compaction must match
-    byte-for-byte (:func:`snapshot_files_intact`). Cached by source
-    (size, mtime_ns); atomic rename publish."""
+    byte-for-byte (:func:`snapshot_files_intact`). Staged once per
+    source by :func:`staged_dir`."""
     import json
-    import time
 
-    src = os.path.join(sf_dir, "events.parquet")
     staged = stage_fragmented_events(spark, sf_dir, n_buckets)
     compacted = incremental_compact_fragments(spark, sf_dir, n_buckets, max_files)
-    out_dir = (
-        f"/tmp/spark_graft_p12_manifest_{_stage_key(src, f'p12:{n_buckets}:{max_files}')}"
-    )
-    _sweep_stale_stage_work("/tmp/spark_graft_p12_manifest_")
-    if os.path.isdir(out_dir):
-        return out_dir
 
     def entries(root: str) -> dict[int, list[dict]]:
         per: dict[int, list[dict]] = {}
@@ -522,19 +512,23 @@ def stage_versioned_events(
             )
         return per
 
-    v1 = entries(staged)
-    v2_src = entries(compacted)  # rewritten buckets only
-    v2 = {k: v2_src.get(k, files) for k, files in v1.items()}
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    os.makedirs(work)
-    for ver, per in ((1, v1), (2, v2)):
-        with open(os.path.join(work, f"v{ver}.json"), "w") as f:
-            json.dump(
-                {"version": ver, "files": [e for k in sorted(per) for e in per[k]]},
-                f,
-                indent=1,
-            )
-    return _publish_stage(work, out_dir)
+    def build(work: str) -> None:
+        v1 = entries(staged)
+        v2_src = entries(compacted)  # rewritten buckets only
+        v2 = {k: v2_src.get(k, files) for k, files in v1.items()}
+        os.makedirs(work)
+        for ver, per in ((1, v1), (2, v2)):
+            with open(os.path.join(work, f"v{ver}.json"), "w") as f:
+                json.dump(
+                    {"version": ver, "files": [e for k in sorted(per) for e in per[k]]},
+                    f,
+                    indent=1,
+                )
+
+    src = os.path.join(sf_dir, "events.parquet")
+    return staged_dir(
+        "p12_manifest", _stage_key(src, f"p12:{n_buckets}:{max_files}"), build
+    )
 
 
 def _load_manifest(manifest_dir: str, version: int) -> list[dict]:
@@ -618,103 +612,101 @@ def stage_cdf_commit(spark, sf_dir: str, n_buckets: int = 16) -> str:
     version-1 file, which is what makes the p13 diff file-pruned. Manifests
     v1/v2 use p12's entry schema (bucket, path, root, size, mtime_ns), so
     :func:`read_snapshot` and :func:`snapshot_files_intact` work unchanged.
-    Cached by source (size, mtime_ns); atomic rename publish."""
+    Staged once per source by :func:`staged_dir`."""
     import json
-    import time
 
     from pyspark.sql import functions as F
 
     from .readers import load_table
 
     src = os.path.join(sf_dir, "events.parquet")
-    out_dir = f"/tmp/spark_graft_p13_cdf_{_stage_key(src, f'p13:{n_buckets}')}"
-    _sweep_stale_stage_work("/tmp/spark_graft_p13_cdf_")
-    if os.path.isdir(out_dir):
-        return out_dir
+    key = _stage_key(src, f"p13:{n_buckets}")
+    out_dir = _staged_path("p13_cdf", key)
 
     def bucket_of(c):
         return F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10).cast(
             "bigint"
         ) % n_buckets
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value",
-        bucket_of(F.col("event_id")).alias("bucket"),
-    )
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    base_root = os.path.join(work, "base")
-    # one task per bucket → exactly one part file per bucket directory
-    ev.repartition("bucket").write.partitionBy("bucket").parquet(base_root)
-
-    is_del = F.col("event_id") % 97 == 0
-    is_upd = (F.col("event_id") % 103 == 0) & ~is_del
-    # affected buckets: metadata-scale collect (≤ n_buckets rows)
-    affected = sorted(
-        r.bucket
-        for r in ev.where(is_del | is_upd).select("bucket").distinct().collect()
-    )
-    rw_root = os.path.join(work, "rewrite")
-    (
-        ev.where(F.col("bucket").isin(affected) & ~is_del)
-        .withColumn(
-            "value",
-            F.when(is_upd, F.coalesce(F.col("value"), F.lit(0.0)) + 1.0).otherwise(
-                F.col("value")
-            ),
+    def build(work: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value",
+            bucket_of(F.col("event_id")).alias("bucket"),
         )
-        .repartition("bucket")
-        .write.partitionBy("bucket")
-        .parquet(rw_root)
-    )
-    app_root = os.path.join(work, "append")
-    new_id = F.col("event_id") + F.lit(_CDF_INSERT_OFFSET)
-    (
-        ev.where(F.col("event_id") % 101 == 0)
-        .select(
-            new_id.alias("event_id"), "user_id", "event_type", "value",
-            bucket_of(new_id).alias("bucket"),
-        )
-        .repartition("bucket")
-        .write.partitionBy("bucket")
-        .parquet(app_root)
-    )
+        base_root = os.path.join(work, "base")
+        # one task per bucket → exactly one part file per bucket directory
+        ev.repartition("bucket").write.partitionBy("bucket").parquet(base_root)
 
-    def entries(root: str) -> list[dict]:
-        out = []
-        for p in sorted(
-            glob.glob(os.path.join(root, "bucket=*", "**", "*.parquet"), recursive=True)
-        ):
-            st = os.stat(p)
-            out.append(
-                {
-                    "bucket": int(p.split("bucket=")[1].split(os.sep)[0]),
-                    "path": p,
-                    "root": root,
-                    "size": st.st_size,
-                    "mtime_ns": st.st_mtime_ns,
-                }
+        is_del = F.col("event_id") % 97 == 0
+        is_upd = (F.col("event_id") % 103 == 0) & ~is_del
+        # affected buckets: metadata-scale collect (≤ n_buckets rows)
+        affected = sorted(
+            r.bucket
+            for r in ev.where(is_del | is_upd).select("bucket").distinct().collect()
+        )
+        rw_root = os.path.join(work, "rewrite")
+        (
+            ev.where(F.col("bucket").isin(affected) & ~is_del)
+            .withColumn(
+                "value",
+                F.when(is_upd, F.coalesce(F.col("value"), F.lit(0.0)) + 1.0).otherwise(
+                    F.col("value")
+                ),
             )
-        return out
+            .repartition("bucket")
+            .write.partitionBy("bucket")
+            .parquet(rw_root)
+        )
+        app_root = os.path.join(work, "append")
+        new_id = F.col("event_id") + F.lit(_CDF_INSERT_OFFSET)
+        (
+            ev.where(F.col("event_id") % 101 == 0)
+            .select(
+                new_id.alias("event_id"), "user_id", "event_type", "value",
+                bucket_of(new_id).alias("bucket"),
+            )
+            .repartition("bucket")
+            .write.partitionBy("bucket")
+            .parquet(app_root)
+        )
 
-    v1 = entries(base_root)
-    v2 = [e for e in v1 if e["bucket"] not in set(affected)] + entries(
-        rw_root
-    ) + entries(app_root)
-    # entries were stat'ed inside the work dir; the atomic publish RENAMES
-    # work → out_dir (file stats survive a dir rename), so the recorded
-    # paths/roots must point at the published location
-    # v2 SHARES the carried-over entry dicts with v1 — guard so each
-    # object is rewritten exactly once
-    for files in (v1, v2):
-        for e in files:
-            if e["path"].startswith(work):
-                e["path"] = out_dir + e["path"][len(work):]
-            if e["root"].startswith(work):
-                e["root"] = out_dir + e["root"][len(work):]
-    for ver, files in ((1, v1), (2, v2)):
-        with open(os.path.join(work, f"v{ver}.json"), "w") as f:
-            json.dump({"version": ver, "files": files}, f, indent=1)
-    return _publish_stage(work, out_dir)
+        def entries(root: str) -> list[dict]:
+            out = []
+            for p in sorted(
+                glob.glob(os.path.join(root, "bucket=*", "**", "*.parquet"), recursive=True)
+            ):
+                st = os.stat(p)
+                out.append(
+                    {
+                        "bucket": int(p.split("bucket=")[1].split(os.sep)[0]),
+                        "path": p,
+                        "root": root,
+                        "size": st.st_size,
+                        "mtime_ns": st.st_mtime_ns,
+                    }
+                )
+            return out
+
+        v1 = entries(base_root)
+        v2 = [e for e in v1 if e["bucket"] not in set(affected)] + entries(
+            rw_root
+        ) + entries(app_root)
+        # entries were stat'ed inside the work dir; the atomic publish RENAMES
+        # work → out_dir (file stats survive a dir rename), so the recorded
+        # paths/roots must point at the published location
+        # v2 SHARES the carried-over entry dicts with v1 — guard so each
+        # object is rewritten exactly once
+        for files in (v1, v2):
+            for e in files:
+                if e["path"].startswith(work):
+                    e["path"] = out_dir + e["path"][len(work):]
+                if e["root"].startswith(work):
+                    e["root"] = out_dir + e["root"][len(work):]
+        for ver, files in ((1, v1), (2, v2)):
+            with open(os.path.join(work, f"v{ver}.json"), "w") as f:
+                json.dump({"version": ver, "files": files}, f, indent=1)
+
+    return staged_dir("p13_cdf", key, build)
 
 
 def read_manifest_files(spark, entries: list[dict]):
@@ -762,28 +754,21 @@ def stage_mv_base(spark, manifest_dir: str, version: int = 1) -> str:
     query measures the maintenance path). Grain: per ``event_type`` —
     COUNT(*) and SUM(floor(value*1000)), the two self-maintainable
     aggregates (MIN/MAX/COUNT DISTINCT would need auxiliary state and are
-    deliberately out of the MV contract). Cached by the version manifest's
-    (size, mtime_ns); atomic rename publish."""
-    import time
-
+    deliberately out of the MV contract). Staged once per version
+    manifest by :func:`staged_dir`."""
     from pyspark.sql import functions as F
 
-    manifest_file = os.path.join(manifest_dir, f"v{version}.json")
-    out_dir = (
-        f"/tmp/spark_graft_p14_mv_{_stage_key(manifest_file, f'p14:{version}')}"
-    )
-    _sweep_stale_stage_work("/tmp/spark_graft_p14_mv_")
-    if os.path.isdir(out_dir):
-        return out_dir
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    mv = (
-        read_snapshot(spark, manifest_dir, version)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(mv_milli(F.col("value"))).cast("bigint").alias("v_milli_sum"),
+    def build(work: str) -> None:
+        mv = (
+            read_snapshot(spark, manifest_dir, version)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+                F.sum(mv_milli(F.col("value"))).cast("bigint").alias("v_milli_sum"),
+            )
         )
-    )
-    # MV grain is event_type (a handful of groups): one part file
-    mv.coalesce(1).write.parquet(work)
-    return _publish_stage(work, out_dir)
+        # MV grain is event_type (a handful of groups): one part file
+        mv.coalesce(1).write.parquet(work)
+
+    manifest_file = os.path.join(manifest_dir, f"v{version}.json")
+    return staged_dir("p14_mv", _stage_key(manifest_file, f"p14:{version}"), build)

@@ -291,94 +291,84 @@ def replay_dir_with_sentinels(sf_dir: str, *, glob: str = "events.parquet") -> s
     session-window SQL becomes a valid exact oracle for the streaming
     stateful operator.
 
-    The staged dir is keyed by source path+mtime under /tmp and reused;
-    the events file itself is byte-copied (schema-preserving for either
-    fixture generation — see ``streaming/source.py``). Staging is done in
-    a process-unique scratch dir and published with one atomic
-    ``os.rename`` — a concurrent session can never observe a
-    half-staged directory (it either sees the complete dir or stages its
-    own copy and loses the rename race harmlessly).
+    The events file itself is byte-copied (schema-preserving for either
+    fixture generation — see ``streaming/source.py``). Staged once per
+    source by :func:`sources.writers.staged_dir`, so a concurrent session
+    sees the whole replay dir or none of it.
     """
-    import hashlib
     import shutil
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from ..sources.writers import _stage_key, staged_dir
+
     src = os.path.join(sf_dir, glob)
-    key = hashlib.md5(f"{os.path.abspath(src)}:{os.path.getmtime(src)}".encode()).hexdigest()[:10]
-    out_dir = os.path.join("/tmp", f"spark_graft_st3_replay_{key}")
-    if os.path.isdir(out_dir):
-        return out_dir
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    os.makedirs(work)
-    t = pq.read_table(src)  # file OR Spark-written part-file directory
-    if os.path.isdir(src):
-        # directory layout (synthesized/production tables): stage the
-        # concatenated parts as the one real-data file of the replay
-        pq.write_table(t, os.path.join(work, "00_events.parquet"))
-    else:
-        shutil.copyfile(src, os.path.join(work, "00_events.parquet"))
-    schema = t.schema
-    max_ts = pc.max(t["ts"]).as_py()  # datetime (ns or µs unit — arrow handles both)
-    year = dt.timedelta(days=365)
-    base = time.time() - 3600
-    os.utime(os.path.join(work, "00_events.parquet"), (base, base))
-    for i, delta in enumerate((year, year + dt.timedelta(days=30)), start=1):
-        row = {
-            "event_id": pa.array([-i], type=schema.field("event_id").type),
-            "ts": pa.array([max_ts + delta], type=schema.field("ts").type),
-            "user_id": pa.array([-1], type=schema.field("user_id").type),
-            "event_type": pa.array(["click"], type=schema.field("event_type").type),
-            "value": pa.array([0.0], type=schema.field("value").type),
-            "props": pa.array(["{}"], type=schema.field("props").type),
-        }
-        path = os.path.join(work, f"{i:02d}_sentinel.parquet")
-        pq.write_table(pa.table([row[f.name] for f in schema], schema=schema), path)
-        os.utime(path, (base + 10 * i, base + 10 * i))
-    try:
-        os.rename(work, out_dir)  # atomic publish
-    except OSError:
-        shutil.rmtree(work, ignore_errors=True)  # another process won the race
-    return out_dir
+
+    def build(work: str) -> None:
+        os.makedirs(work)
+        t = pq.read_table(src)  # file OR Spark-written part-file directory
+        if os.path.isdir(src):
+            # directory layout (synthesized/production tables): stage the
+            # concatenated parts as the one real-data file of the replay
+            pq.write_table(t, os.path.join(work, "00_events.parquet"))
+        else:
+            shutil.copyfile(src, os.path.join(work, "00_events.parquet"))
+        schema = t.schema
+        max_ts = pc.max(t["ts"]).as_py()  # datetime (ns or µs unit — arrow handles both)
+        year = dt.timedelta(days=365)
+        base = time.time() - 3600
+        os.utime(os.path.join(work, "00_events.parquet"), (base, base))
+        for i, delta in enumerate((year, year + dt.timedelta(days=30)), start=1):
+            row = {
+                "event_id": pa.array([-i], type=schema.field("event_id").type),
+                "ts": pa.array([max_ts + delta], type=schema.field("ts").type),
+                "user_id": pa.array([-1], type=schema.field("user_id").type),
+                "event_type": pa.array(["click"], type=schema.field("event_type").type),
+                "value": pa.array([0.0], type=schema.field("value").type),
+                "props": pa.array(["{}"], type=schema.field("props").type),
+            }
+            path = os.path.join(work, f"{i:02d}_sentinel.parquet")
+            pq.write_table(pa.table([row[f.name] for f in schema], schema=schema), path)
+            os.utime(path, (base + 10 * i, base + 10 * i))
+
+    return staged_dir("st3_replay", _stage_key(src, "st3"), build)
 
 
 def replay_table_slices(sf_dir: str, table: str = "documents", *, n_files: int = 4) -> str:
     """Stage ``<table>.parquet`` as ``n_files`` row-slices with ascending
     mtimes so a ``maxFilesPerTrigger=1`` stream replays the table as
     n_files micro-batches (st7/st8's incremental-arrival simulation).
-    Atomic publish via rename, same discipline as
-    ``replay_dir_with_sentinels``.
+    Staged once by :func:`sources.writers.staged_dir`.
     """
     import hashlib
-    import shutil
 
     import pyarrow.parquet as pq
 
+    from ..sources.writers import staged_dir
+
     src = os.path.join(sf_dir, f"{table}.parquet")
+
+    def build(work: str) -> None:
+        os.makedirs(work)
+        t = pq.read_table(src)
+        n = t.num_rows
+        base = time.time() - 3600
+        step = max(1, (n + n_files - 1) // n_files)
+        for i in range(n_files):
+            sl = t.slice(i * step, step)
+            path = os.path.join(work, f"{i:02d}_{table}.parquet")
+            pq.write_table(sl, path)
+            os.utime(path, (base + 10 * i, base + 10 * i))
+
+    # the one staged layout not keyed by _stage_key: the benchmark
+    # recomputes this exact name (path:getmtime:n_files) to clean up after
+    # each run, so the key must stay byte-for-byte as it is
     key = hashlib.md5(
         f"{os.path.abspath(src)}:{os.path.getmtime(src)}:{n_files}".encode()
     ).hexdigest()[:10]
-    out_dir = os.path.join("/tmp", f"spark_graft_replay_{table}_{key}")
-    if os.path.isdir(out_dir):
-        return out_dir
-    work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
-    os.makedirs(work)
-    t = pq.read_table(src)
-    n = t.num_rows
-    base = time.time() - 3600
-    step = max(1, (n + n_files - 1) // n_files)
-    for i in range(n_files):
-        sl = t.slice(i * step, step)
-        path = os.path.join(work, f"{i:02d}_{table}.parquet")
-        pq.write_table(sl, path)
-        os.utime(path, (base + 10 * i, base + 10 * i))
-    try:
-        os.rename(work, out_dir)  # atomic publish
-    except OSError:
-        shutil.rmtree(work, ignore_errors=True)
-    return out_dir
+    return staged_dir(f"replay_{table}", key, build)
 
 
 def maintain_contamination_bloom(

@@ -8,6 +8,8 @@ schema kind, order-insensitive value multiset) against its DuckDB oracle
 at sf0.01 and writes one dated artifact covering all of them.
 
 Usage: python -m tests.full_sweep [sf_dir] [out_json]
+
+``out_json`` defaults to the next round's artifact (:func:`default_out`).
 """
 
 from __future__ import annotations
@@ -65,23 +67,29 @@ def sweep(spark, sf_dir: str) -> dict[str, dict]:
     return results
 
 
+def default_out(repo: str) -> str:
+    """The next round's artifact name, ``CORRECTNESS_full_r{latest+1}.json``.
+
+    Never the latest committed artifact: that one vouches for
+    ``PLAN_BASELINE.json``, and a sweep with fails written over it would
+    void the baseline's record."""
+    import glob as _glob
+
+    from .plan_manifest import round_num
+
+    rounds = [round_num(p) for p in _glob.glob(os.path.join(repo, "CORRECTNESS_full_r*.json"))]
+    return f"CORRECTNESS_full_r{max(rounds, default=0) + 1}.json"
+
+
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     if len(args) > 1:
         out = args[1]
     else:
-        # default: REFRESH the current round's artifact (the latest
-        # committed one) — a hardcoded name here silently clobbered an
-        # OLDER round's artifact once (r7 sweep → r5 file)
-        import glob as _glob
+        from .plan_manifest import REPO
 
-        from .plan_manifest import REPO, round_num
-
-        latest = sorted(
-            _glob.glob(os.path.join(REPO, "CORRECTNESS_full_r*.json")), key=round_num
-        )
-        out = os.path.basename(latest[-1]) if latest else "CORRECTNESS_full_r1.json"
+        out = default_out(REPO)
 
     from etl_pipeline_telecom_spark.session import get_spark
 

@@ -53,6 +53,15 @@ def test_full_sweep_artifact_covers_catalog_with_zero_fails():
     assert rows_only == _JUSTIFIED_ROWS_ONLY
 
 
+def test_default_out_is_the_next_round(tmp_path):
+    from .full_sweep import default_out
+
+    assert default_out(str(tmp_path)) == "CORRECTNESS_full_r1.json"
+    for n in (9, 17, 10):  # numeric, not lexicographic, order
+        (tmp_path / f"CORRECTNESS_full_r{n}.json").write_text("{}")
+    assert default_out(str(tmp_path)) == "CORRECTNESS_full_r18.json"
+
+
 @pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_FULL_SWEEP"),
     reason="live full sweep is ~3 min; set SPARK_GRAFT_FULL_SWEEP=1",

@@ -300,6 +300,114 @@ def test_stale_stage_work_sweep(tmp_path):
     assert os.path.isdir(fresh)
 
 
+@pytest.fixture
+def stage_root(tmp_path, monkeypatch):
+    """Point ``staged_dir`` at a private root instead of /tmp."""
+    from etl_pipeline_telecom_spark.sources import writers
+
+    root = tmp_path / "stage"
+    root.mkdir()
+    monkeypatch.setattr(writers, "_STAGE_ROOT", str(root))
+    return root
+
+
+def _write_marker(work, text="x"):
+    import os
+
+    os.makedirs(work)
+    with open(os.path.join(work, "marker"), "w") as fh:
+        fh.write(text)
+
+
+def test_staged_dir_second_call_reuses(stage_root):
+    from etl_pipeline_telecom_spark.sources.writers import staged_dir
+
+    calls = []
+
+    def build(work):
+        calls.append(work)
+        _write_marker(work)
+
+    first = staged_dir("fam", "k1", build)
+    assert staged_dir("fam", "k1", build) == first
+    assert len(calls) == 1
+    assert first == str(stage_root / "spark_graft_fam_k1")
+
+
+def test_staged_dir_failed_build_leaves_nothing(stage_root):
+    from etl_pipeline_telecom_spark.sources.writers import staged_dir
+
+    def build(work):
+        _write_marker(work)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        staged_dir("fam", "k1", build)
+    assert list(stage_root.iterdir()) == []
+
+
+def test_staged_dir_race_loser_drops_its_copy(stage_root):
+    """A rival publishes while this build runs: the rename loses, the
+    loser's work dir goes, and both callers get the winner's layout."""
+    from etl_pipeline_telecom_spark.sources.writers import staged_dir
+
+    rival = []
+
+    def slow_build(work):
+        _write_marker(work, "loser")
+        rival.append(staged_dir("fam", "k1", lambda w: _write_marker(w, "winner")))
+
+    path = staged_dir("fam", "k1", slow_build)
+    assert rival == [path]
+    assert [p.name for p in stage_root.iterdir()] == ["spark_graft_fam_k1"]
+    assert (stage_root / "spark_graft_fam_k1" / "marker").read_text() == "winner"
+
+
+def test_same_second_rewrite_restages_replays(stage_root, tmp_path, sf_dir):
+    """An in-place rewrite of events.parquet with a different size but the
+    very same mtime must restage x4's JSONL and st3's replay: both are
+    keyed by ``_stage_key`` (size + mtime_ns), not by a float mtime."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from etl_pipeline_telecom_spark.sources.readers import stage_events_jsonl
+    from etl_pipeline_telecom_spark.streaming.jobs import replay_dir_with_sentinels
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    src = d / "events.parquet"
+    full = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    pq.write_table(full, src)
+    jsonl1 = stage_events_jsonl(str(d))
+    replay1 = replay_dir_with_sentinels(str(d))
+
+    st = os.stat(src)
+    pq.write_table(full.slice(0, full.num_rows // 2), src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.path.getmtime(src) == st.st_mtime and os.stat(src).st_size != st.st_size
+
+    jsonl2 = stage_events_jsonl(str(d))
+    replay2 = replay_dir_with_sentinels(str(d))
+    assert jsonl2 != jsonl1 and replay2 != replay1
+    with open(jsonl2) as fh:
+        assert sum(1 for _ in fh) == full.num_rows // 2
+    assert pq.read_table(os.path.join(replay2, "00_events.parquet")).num_rows == full.num_rows // 2
+
+
+def test_replay_table_slices_keeps_legacy_name(sf_dir):
+    import hashlib
+    import os
+
+    from etl_pipeline_telecom_spark.streaming.jobs import replay_table_slices
+
+    # the one key outside _stage_key: the benchmark recomputes this name
+    # (path:getmtime:n_files) to remove the replay after each run
+    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
+    key = hashlib.md5(f"{src}:{os.path.getmtime(src)}:4".encode()).hexdigest()[:10]
+    assert replay_table_slices(sf_dir, "documents") == f"/tmp/spark_graft_replay_documents_{key}"
+
+
 # ---------------------------------------------------------------------------
 # st12: stream-stream LEFT OUTER join
 # ---------------------------------------------------------------------------

@@ -43,6 +43,38 @@ def test_validation_detects_failures(spark):
     assert not results["domain:b"]["passed"]
 
 
+def test_run_pipeline_releases_its_cache(spark, tmp_path):
+    """run_pipeline caches the analytics input for its six sinks and must
+    release it: no persisted RDD outlives the call."""
+    import csv
+
+    from etl_pipeline_telecom_spark.plans.churn import RAW_COLUMNS, run_pipeline
+
+    raw = tmp_path / "raw.csv"
+    with open(raw, "w", newline="") as fh:
+        w = csv.writer(fh)
+        w.writerow([n for n, _ in RAW_COLUMNS])
+        for i, (contract, internet, total, churn) in enumerate(
+            [
+                ("Month-to-month", "DSL", "29.85", "No"),
+                ("One year", "Fiber optic", " ", "Yes"),
+                ("Two year", "No", "1889.5", "No"),
+                ("Month-to-month", "Fiber optic", "108.15", "Yes"),
+            ]
+        ):
+            w.writerow(
+                [f"c{i}", "Female", 0, "Yes", "No", 12 * i + 1, "Yes", "No", internet]
+                + ["No"] * 6
+                + [contract, "Yes", "Electronic check", 20.0 + 25 * i, total, churn]
+            )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    paths = run_pipeline(spark, str(raw), str(tmp_path / "out"))
+    assert persisted().size() == before
+    with open(paths["summary_json"]) as fh:
+        assert json.load(fh)[0]["total_rows"] == 4
+
+
 def test_domain_check_fails_on_nulls(spark):
     """NULLs must fail domain checks as the reference's unique() does
     (validate.py:97 surfaces NaN) — collect_set alone would drop them."""
